@@ -1,31 +1,45 @@
-"""Fused HTML extraction kernel: the fastscan event loop with the
-``_ExtractorState`` sink inlined as plain local variables.
+"""Fused HTML extraction kernel: a stdlib-``HTMLParser``-exact event
+scanner with the ``_ExtractorState`` sink inlined as plain local
+variables.
 
-``fastscan.scan`` + ``_ExtractorState`` spend a large share of kernel
-CPU on Python call overhead (~1k calls/doc: four sink callbacks,
-``_flush_block``, ``_TAG_FLAGS.get``). This module is the same state
-machine with every hot path — text data, plain start tags,
-``</name>`` end tags, block-boundary flushes — expanded inline in one
-function whose state lives entirely in function-locals (LOAD_FAST; no
-closures, which would demote the loop variables to cell lookups —
-measured slower than the callback design they replace). Rare paths
-(trailing-slash start tags, EOF recovery, block construction) are
-module-level *pure* helpers: they take values and return values, so
-the main loop keeps exclusive ownership of all mutable state.
+The scanner emits the same event stream that
+``html.parser.HTMLParser(convert_charrefs=True)`` produces for
+``feed(text); close()`` — same tags, same data chunks, same chunk
+*boundaries* (block link-char accounting depends on them) — but skips
+everything the extraction kernel never uses: attribute parsing,
+line/offset tracking, incremental-feed buffering. It reuses the stdlib
+module's own compiled regexes (``tagfind_tolerant``,
+``locatestarttagend_tolerant``, ``endtagfind``, ``commentclose``) so
+tag-boundary decisions cannot drift from the reference semantics.
+
+Driving ``_ExtractorState`` through per-event callbacks spends a large
+share of kernel CPU on Python call overhead (~1k calls/doc: four sink
+callbacks, ``_flush_block``, ``_TAG_FLAGS.get``). This module expands
+every hot path — text data, plain start tags, ``</name>`` end tags,
+block-boundary flushes — inline in one function whose state lives
+entirely in function-locals (LOAD_FAST; no closures, which would
+demote the loop variables to cell lookups). Rare paths (trailing-slash
+start tags, EOF recovery, block construction) are module-level *pure*
+helpers: they take values and return values, so the main loop keeps
+exclusive ownership of all mutable state.
 
 Parity contract: identical ``ExtractionResult`` to the ``stdlib``
-backend for every input — pinned by the same differential fuzz suite
-that pins ``fast`` (tests/test_fastscan_parity.py runs every parity
-case over both scanners) plus the reference-fixture byte goldens.
+backend for every input — pinned by the differential fuzz suite
+(tests/test_fastscan_parity.py runs every parity case over ``fused``
+and ``c``) plus the reference-fixture byte goldens.
 
-One deliberate shortcut the sink-driven backends can't observe: data
+One deliberate shortcut the stdlib backend can't observe: data
 inside skip subtrees (``noscript``/``template``; script/style are
 CDATA and never reach ``unescape`` in any backend) is dropped without
 charref conversion — the sink would discard it unseen either way.
+Invalid marked sections (``<![bogus ...``) raise ``AssertionError`` in
+both this kernel and the stdlib parser, with different messages;
+callers only see ``parse_failed=True``.
 """
 
 from __future__ import annotations
 
+import re
 from html import unescape
 from html.parser import (  # type: ignore[attr-defined]
     attrfind_tolerant,
@@ -35,15 +49,6 @@ from html.parser import (  # type: ignore[attr-defined]
     tagfind_tolerant,
 )
 
-from solrizer_spark.extraction.fastscan import (
-    _cdata_close,
-    _INCOMPLETE_NEXT,
-    _MARKED_MS,
-    _MARKED_STD,
-    _declname_match,
-    _markedsectionclose,
-    _msmarkedsectionclose,
-)
 from solrizer_spark.extraction.html_text import (
     _F_BLOCK,
     _F_BOILER,
@@ -60,6 +65,20 @@ from solrizer_spark.extraction.html_text import (
 __all__ = ["run_fused"]
 
 _F_DEPTH = _F_SKIP | _F_LINK | _F_BOILER | _F_TITLE
+
+_declname_match = re.compile(r"[a-zA-Z][-_.a-zA-Z0-9]*\s*").match
+_markedsectionclose = re.compile(r"]\s*]\s*>")
+_msmarkedsectionclose = re.compile(r"]\s*>")
+_cdata_close = {
+    "script": re.compile(r"</\s*script", re.IGNORECASE),
+    "style": re.compile(r"</\s*style", re.IGNORECASE),
+}
+# characters after a locatestarttagend match that mean "incomplete
+# start tag at end of buffer" in check_for_whole_start_tag
+_INCOMPLETE_NEXT = frozenset("abcdefghijklmnopqrstuvwxyz=/ABCDEFGHIJKLMNOPQRSTUVWXYZ")
+
+_MARKED_STD = frozenset({"temp", "cdata", "ignore", "include", "rcdata"})
+_MARKED_MS = frozenset({"if", "else", "endif"})
 
 
 def _flush_block(blocks: list, stack: list, buf: list, link_chars: int,
@@ -90,8 +109,10 @@ def _flush_block(blocks: list, stack: list, buf: list, link_chars: int,
 
 def _exact_starttag_kind(s: str, i: int, endpos: int) -> tuple[str, str]:
     """Exact ``HTMLParser.parse_starttag`` tail for the ambiguous
-    trailing-slash cases (see fastscan._exact_starttag): re-scan
-    attributes with the stdlib's own regex, then classify. Pure:
+    trailing-slash cases: the boundary regex consumed a trailing '/',
+    and only an attribute re-scan with the stdlib's own regex can tell
+    ``<br/>`` (startendtag) from ``<a href=foo/>`` (the '/' belongs to
+    a bare value, so it is a plain starttag). Pure:
     returns ``(kind, tag)`` with kind ∈ {'start','startend','data'}
     (for 'data' the caller re-emits ``s[i:endpos]``)."""
     m = tagfind_tolerant.match(s, i + 1)
@@ -112,9 +133,8 @@ def _exact_starttag_kind(s: str, i: int, endpos: int) -> tuple[str, str]:
 
 def _eof_span(s: str, i: int) -> int:
     """``HTMLParser.goahead(end=1)`` recovery span for an unterminated
-    construct (see fastscan._eof_recover): end index of the slice to
-    re-emit as data — through the next '>', else to the next '<',
-    else one char."""
+    construct: end index of the slice to re-emit as data — through the
+    next '>', else to the next '<', else one char."""
     k = s.find(">", i + 1)
     if k < 0:
         k = s.find("<", i + 1)
@@ -199,7 +219,7 @@ def run_fused(s: str) -> _ExtractorState:
                         buf_link_chars += len(" ".join(c0.split()))
             i = j
 
-        # ---- dispatch at '<' (same order as fastscan.scan) -----------
+        # ---- dispatch at '<' (same order as HTMLParser.goahead) ------
         c = s[i + 1 : i + 2]
         stag = None  # pending start-tag event, handled inline below
         etag = None  # pending end-tag event

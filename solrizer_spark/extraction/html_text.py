@@ -133,12 +133,11 @@ class ExtractionResult:
 
 
 class _ExtractorState:
-    """Backend-independent extractor sink: raw text stream + block
-    segmentation, driven by a tag/data event stream. Both the stdlib
-    ``HTMLParser`` backend and the fast scanner
-    (:mod:`solrizer_spark.extraction.fastscan`) feed the same four
-    methods, so the block features and raw-text bytes are backend-
-    invariant by construction."""
+    """Backend-independent extractor state: raw text stream + block
+    segmentation. The stdlib ``HTMLParser`` backend drives it through
+    the four ``_on_*`` event methods; the ``fused`` and ``c`` kernels
+    fill the same fields directly with the same block rules, so the
+    block features and raw-text bytes are backend-invariant."""
 
     def __init__(self) -> None:
         self.raw_parts: list[str] = []
@@ -240,14 +239,12 @@ class _ExtractorState:
         if self._link_depth:
             self._buf_link_chars += len(" ".join(data.split()))
 
-    def finish(self) -> None:  # final flush
-        self._flush_block()
-
 
 class _Extractor(HTMLParser, _ExtractorState):
     """stdlib-``HTMLParser``-driven extractor: the parity-reference
     backend (exactly the round-1/2 kernel). Kept as the semantic
-    oracle the fast scanner is differential-tested against."""
+    oracle the ``fused`` and ``c`` kernels are differential-tested
+    against."""
 
     def __init__(self) -> None:
         HTMLParser.__init__(self, convert_charrefs=True)
@@ -290,42 +287,11 @@ def classify_blocks(blocks: list[Block]) -> None:
             b.kept = True
 
 
-#: Default parse backend. ``auto`` resolves to ``c`` — the compiled
-#: kernel (cscan/, built on first use with the system C compiler,
-#: per-document fused-fallback on its honest-bail constructs) — when
-#: a toolchain is available, else ``fused``. ``fused`` is the
-#: single-function Python kernel (fusedscan.py) — the fastscan state
-#: machine with the sink inlined as locals, ~1.85× stdlib; ``fast``
-#: is the sink-driven single-shot scanner (fastscan.py); all are
-#: stdlib-event-exact and differential-fuzz-pinned. ``stdlib`` is the
-#: HTMLParser-driven parity reference. Overridable per-cluster
-#: without code changes via ``SOLRIZER_HTML_BACKEND`` (executors
-#: inherit it through ``spark.executorEnv.*``).
-import os as _os
-
-DEFAULT_BACKEND = _os.environ.get("SOLRIZER_HTML_BACKEND", "auto")
-
-
-def _run_fast(text: str) -> _ExtractorState:
-    from solrizer_spark.extraction.fastscan import scan
-
-    state = _ExtractorState()
-    scan(text, state)
-    state.finish()
-    return state
-
-
 def _run_stdlib(text: str) -> _ExtractorState:
     parser = _Extractor()
     parser.feed(text)
     parser.close()
     return parser
-
-
-def _run_lxml(text: str) -> _ExtractorState:
-    from solrizer_spark.extraction.lxml_backend import run_lxml
-
-    return run_lxml(text)
 
 
 def _run_fused(text: str) -> _ExtractorState:
@@ -346,18 +312,23 @@ def _run_c(text: str) -> _ExtractorState:
     return state
 
 
+#: Parse backends. ``auto`` (the default) resolves to ``c`` — the
+#: compiled kernel (cscan/, built on first use with the system C
+#: compiler, per-document ``fused`` fallback on its honest-bail
+#: constructs) — when a toolchain is available, else ``fused``, the
+#: single-function Python kernel (fusedscan.py). ``stdlib`` is the
+#: HTMLParser-driven parity reference. All three are
+#: stdlib-event-exact and differential-fuzz-pinned.
 _BACKENDS = {
     "c": _run_c,
     "fused": _run_fused,
-    "fast": _run_fast,
     "stdlib": _run_stdlib,
-    "lxml": _run_lxml,
 }
 
 
 def _resolve_backend(backend: str):
-    """Loud config failure: a typo'd ``SOLRIZER_HTML_BACKEND`` must
-    fail the job, not silently quarantine every page as parse_failed.
+    """Loud config failure: a typo'd backend name must fail the job,
+    not silently quarantine every page as parse_failed.
     ``auto`` degrades silently (c → fused) by design: it is the "use
     the fastest correct kernel this node can run" setting."""
     if backend == "auto":
@@ -368,13 +339,8 @@ def _resolve_backend(backend: str):
         run = _BACKENDS[backend]
     except KeyError:
         raise ValueError(
-            f"unknown HTML backend {backend!r} (auto|c|fused|fast|stdlib|lxml)"
+            f"unknown HTML backend {backend!r} (auto|c|fused|stdlib)"
         ) from None
-    if backend == "lxml":
-        from solrizer_spark.extraction.lxml_backend import HAVE_LXML
-
-        if not HAVE_LXML:
-            raise ImportError("backend='lxml' selected but lxml is not installed on this image")
     if backend == "c":
         from solrizer_spark.extraction import cscan
 
@@ -389,7 +355,7 @@ def _resolve_backend(backend: str):
 
 def extract_html(
     payload: bytes | str | None,
-    backend: str | None = None,
+    backend: str = "auto",
     http_charset: str | None = None,
 ) -> ExtractionResult:
     """Parse one HTML payload into ``ExtractionResult``.
@@ -399,8 +365,8 @@ def extract_html(
     bad page (reference analog: IndexerError quarantine paths,
     src/solrizer/indexers/extracted_text.py:100-103).
 
-    ``backend`` selects the parse kernel (default
-    :data:`DEFAULT_BACKEND`): all backends drive the same
+    ``backend`` selects the parse kernel (``auto`` | ``c`` | ``fused``
+    | ``stdlib``): all backends fill the same
     ``_ExtractorState`` sink, so block features and raw-text bytes are
     kernel-independent; byte parity is pinned by the reference-fixture
     goldens and a differential fuzz suite.
@@ -419,7 +385,7 @@ def extract_html(
             return ExtractionResult(None, None, parse_failed=True, error="empty_html")
         text = payload
         encoding, charset_source = "utf-8", "strict"
-    run = _resolve_backend(backend or DEFAULT_BACKEND)
+    run = _resolve_backend(backend)
     try:
         state = run(text)
     except Exception as e:  # both kernels are tolerant; belt and braces

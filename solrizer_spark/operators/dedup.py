@@ -114,40 +114,16 @@ def ngram_jaccard(text_a: Column, text_b: Column, n: int = 3) -> Column:
     return jaccard(word_shingles(text_a, n), word_shingles(text_b, n))
 
 
-def bucket_pairs(items: Column) -> Column:
-    """All (i < j) pairs within a bucket's member array, as
-    ``array<struct<a, b>>`` over the member elements. Callers cap and
-    sort the member array first (deterministic truncation).
-
-    NOTE: nested higher-order lambdas evaluate INTERPRETED per
-    element; for the hot row-generating path use
-    :func:`explode_bucket_pairs` (codegen Generate nodes, same pair
-    set — profiled ~25× on the simhash pair stage, round 6). This
-    expression form remains for contexts that need the pairs as an
-    array column."""
-    return F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), F.size(items) - 1),
-            lambda i: F.transform(
-                F.sequence(i + 1, F.size(items)),
-                lambda j: F.struct(
-                    F.element_at(items, i).alias("a"),
-                    F.element_at(items, j).alias("b"),
-                ),
-            ),
-        )
-    )
-
-
 def explode_bucket_pairs(buckets: DataFrame, members_col: str) -> DataFrame:
     """All (i < j) pairs from each bucket's member array, one ROW per
-    pair with columns ``a`` and ``b`` — the row-generating twin of
-    :func:`bucket_pairs`, shared by every LSH candidate generator.
+    pair with columns ``a`` and ``b``, shared by every LSH candidate
+    generator. Callers cap and sort the member array first
+    (deterministic truncation).
 
     Shape: ``posexplode`` picks element i as ``a``; ``slice(members,
     i+2, size-i-1)`` + ``explode`` yields every LATER element as
     ``b``. Both Generate nodes and the slice are whole-stage codegen,
-    where the nested-``transform``-``flatten`` expression runs
+    where a nested-``transform``-``flatten`` expression runs
     interpreted per element — on a capped degenerate bucket that is
     the difference between a multi-second single-task stage and
     milliseconds (the post-groupBy stage is AQE-coalesced by BYTES,

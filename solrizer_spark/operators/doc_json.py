@@ -43,21 +43,6 @@ def json_entry(key: Column | str, value: Column) -> Column:
     return F.when(value.isNotNull(), fragment)
 
 
-def json_entry_array(key: Column | str, value: Column) -> Column:
-    """Like :func:`json_entry` but omits empty arrays too."""
-    return F.when(F.size(value) > 0, json_entry(key, value))
-
-
-def assemble_doc(entries: list[Column]) -> Column:
-    """Sorted-key canonical JSON object from single-entry fragments
-    (runtime sort — used when keys are not plan-time sortable)."""
-    return F.concat(
-        F.lit("{"),
-        F.array_join(F.array_sort(F.array_compact(F.array(*entries))), ","),
-        F.lit("}"),
-    )
-
-
 def _fragment(fields: list[tuple[str, Column]]) -> Column:
     """Render several static-name fields as one JSON fragment via a
     single ``to_json(struct(...))``; null when every field was null."""

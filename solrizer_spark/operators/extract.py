@@ -1,16 +1,16 @@
 """The extraction stage — the engine's single Python hot path.
 
 One Arrow-vectorized pandas UDF maps ``(html binary, text string)`` →
-a typed extraction struct. Everything downstream (main-text assembly,
-routing, metrics, field naming) is native Spark SQL over the struct,
-keeping the Python surface minimal and the rest of the plan inside
-WholeStageCodegen.
+a typed extraction struct whose ``extracted_text`` is already resolved
+in the kernel. Everything downstream (routing flags, metrics, field
+naming) is native Spark SQL over the struct, keeping the Python
+surface minimal and the rest of the plan inside WholeStageCodegen.
 
 Reference semantics re-expressed (src/solrizer/indexers/extracted_text.py):
 
 * content routing OCR → PDF → HTML → plain text (get_text_page,
   extracted_text.py:76-111) becomes payload sniffing inside the UDF
-  (``route`` field) + ``F.when`` chains downstream;
+  (``route`` field);
 * HTML route: get_text-equivalent ``raw_text`` plus scored DOM blocks
   (the new-engine boilerplate classifier, SURVEY.md §2.12);
 * OCR route: ``word|n={page}&xywh={x,y,w,h}`` tokens
@@ -53,28 +53,12 @@ BLOCK_TYPE = T.StructType(
     ]
 )
 
-EXTRACT_TYPE = T.StructType(
-    [
-        T.StructField("route", T.StringType()),  # html | pdf | plain | tagged | failed
-        T.StructField("raw_text", T.StringType()),
-        T.StructField("title", T.StringType()),
-        T.StructField("tagged_text", T.StringType()),
-        T.StructField("blocks", T.ArrayType(BLOCK_TYPE)),
-        T.StructField("parse_failed", T.BooleanType()),
-        T.StructField("error", T.StringType()),
-        T.StructField("bytes_in", T.IntegerType()),
-        T.StructField("charset_source", T.StringType()),
-        T.StructField("canonical_url", T.StringType()),
-        T.StructField("is_noindex", T.BooleanType()),
-    ]
-)
-
-#: Fast-path schema: scalars only. Shipping the nested block array
+#: UDF output schema: scalars only. Shipping the nested block array
 #: through Arrow costs ~9× the extraction kernel itself (measured:
-#: list-of-struct conversion dominates the batch), so the default
-#: stage resolves main-vs-raw text inside the kernel and sends back
-#: flat columns; the block-level detail is opt-in for debugging and
-#: classifier development.
+#: list-of-struct conversion dominates the batch), so the kernel
+#: resolves main-vs-raw text itself and sends back flat columns; the
+#: block array is appended only in detail mode (``include_blocks``),
+#: for debugging and classifier development.
 EXTRACT_FAST_TYPE = T.StructType(
     [
         T.StructField("route", T.StringType()),
@@ -211,10 +195,10 @@ def _extract_one(
             "raw_text": result.raw_text,
             "title": result.title,
             "tagged_text": None,
-            # Block objects, not dicts: the fast path only counts
-            # kept/dropped and joins text, so the per-block as_dict()
-            # conversion is deferred to the detail UDF that actually
-            # serializes the struct column
+            # Block objects, not dicts: the scalar-only schema only
+            # counts kept/dropped and joins text, so the per-block
+            # as_dict() conversion runs only in detail mode, which
+            # serializes the block array
             "blocks": result.blocks,
             "parse_failed": False,
             "error": None,
@@ -241,31 +225,11 @@ def _extract_one(
     return {**_FAILED, "error": "empty_html"}
 
 
-def make_extract_udf(dpi: tuple[int, int] = (400, 400)):
-    @pandas_udf(EXTRACT_TYPE)
-    def extract_udf(
-        html: pd.Series, text: pd.Series, http_charset: pd.Series
-    ) -> pd.DataFrame:
-        out = []
-        for h, t, c in zip(html, text, http_charset):
-            rec = _extract_one(
-                h,
-                t if isinstance(t, str) else None,
-                dpi,
-                c if isinstance(c, str) else None,
-            )
-            if rec["blocks"] is not None:
-                rec = {**rec, "blocks": [b.as_dict() for b in rec["blocks"]]}
-            out.append(rec)
-        return pd.DataFrame(out)
-
-    return extract_udf
-
-
 def _resolve_text(rec: dict) -> str | None:
-    """Final extracted_text decision, kernel-side (fast path). Must
-    stay semantically identical to the Column logic in
-    :func:`extract_stage` detail mode (pinned by tests)."""
+    """Final extracted_text decision, made once per record for both
+    extraction modes: tagged → OCR tokens, plain → passthrough, html
+    with boilerplate detected → kept-block main text, clean html →
+    raw markup-strip bytes (get_text parity)."""
     if rec["parse_failed"]:
         return None
     route = rec["route"]
@@ -280,14 +244,25 @@ def _resolve_text(rec: dict) -> str | None:
     return rec["raw_text"]
 
 
-def make_extract_fast_udf(dpi: tuple[int, int] = (400, 400)):
-    @pandas_udf(EXTRACT_FAST_TYPE)
+def make_extract_fast_udf(
+    dpi: tuple[int, int] = (400, 400), include_blocks: bool = False
+):
+    """The extraction pandas UDF: ``(html, text, http_charset)`` →
+    :data:`EXTRACT_FAST_TYPE`, plus the scored ``blocks`` array when
+    ``include_blocks``."""
+    schema = EXTRACT_FAST_TYPE
+    if include_blocks:
+        schema = T.StructType(
+            schema.fields + [T.StructField("blocks", T.ArrayType(BLOCK_TYPE))]
+        )
+
+    @pandas_udf(schema)
     def extract_fast_udf(
         html: pd.Series, text: pd.Series, http_charset: pd.Series
     ) -> pd.DataFrame:
         # columnar accumulation: dict-of-lists beats list-of-dicts for
         # the pandas→Arrow hop
-        cols: dict[str, list] = {f.name: [] for f in EXTRACT_FAST_TYPE.fields}
+        cols: dict[str, list] = {f.name: [] for f in schema.fields}
         for h, t, c in zip(html, text, http_charset):
             rec = _extract_one(
                 h,
@@ -308,28 +283,13 @@ def make_extract_fast_udf(dpi: tuple[int, int] = (400, 400)):
             cols["charset_source"].append(rec["charset_source"])
             cols["canonical_url"].append(rec["canonical_url"])
             cols["is_noindex"].append(rec["is_noindex"])
+            if include_blocks:
+                cols["blocks"].append(
+                    None if rec["blocks"] is None else [b.as_dict() for b in blocks]
+                )
         return pd.DataFrame(cols)
 
     return extract_fast_udf
-
-
-def kept_blocks(blocks: Column) -> Column:
-    return F.filter(blocks, lambda b: b["kept"])
-
-
-def main_text(blocks: Column) -> Column:
-    """Ordered concatenation of kept block texts. Block arrays are
-    emitted in document order by the kernel; ``array_sort`` on
-    block_index makes the ordering contract explicit and
-    retry-independent (reference analog: ordered page join ' ',
-    extracted_text.py:58 / page_sequence.py:50-71)."""
-    ordered = F.array_sort(
-        kept_blocks(blocks),
-        lambda a, b: F.when(a["block_index"] < b["block_index"], -1)
-        .when(a["block_index"] > b["block_index"], 1)
-        .otherwise(0),
-    )
-    return F.array_join(F.transform(ordered, lambda b: b["text"]), "\n")
 
 
 def page_outline(blocks: Column) -> Column:
@@ -390,11 +350,12 @@ def extract_stage(
       - ``blocks_kept``/``blocks_dropped``/``bytes_in`` metrics
       - ``blocks``          per-block detail, only when ``include_blocks``
 
-    ``include_blocks=False`` (default) is the high-throughput path: the
-    kernel resolves extracted_text and only flat scalars cross the
-    Arrow boundary. ``include_blocks=True`` ships the scored block
-    array and assembles the text with Column expressions — same bytes
-    (pinned by tests), ~9× slower boundary, for debugging/inspection.
+    Both modes run the same UDF, which resolves extracted_text and
+    the block counts in the kernel. ``include_blocks=False`` (default)
+    is the high-throughput path: only flat scalars cross the Arrow
+    boundary. ``include_blocks=True`` also ships the scored block
+    array — same bytes (pinned by tests), ~9× slower boundary, for
+    debugging/inspection.
     """
     # transport-layer charset label (WARC ingest's http_charset column)
     # feeds the decode ladder between BOM and in-document declarations;
@@ -405,57 +366,15 @@ def extract_stage(
         if "http_charset" in df.columns
         else F.lit(None).cast("string")
     )
-    if not include_blocks:
-        fast = make_extract_fast_udf(dpi)
-        df = df.withColumn("_ext", fast(F.col("html"), F.col("text"), hint))
-        e = F.col("_ext")
-        return (
-            df.withColumn("route", e["route"])
-            .withColumn("title", e["title"])
-            .withColumn("parse_failed", e["parse_failed"])
-            .withColumn("error", e["error"])
-            .withColumn("bytes_in", e["bytes_in"])
-            .withColumn("is_tagged", e["route"] == F.lit("tagged"))
-            .withColumn("blocks_kept", e["blocks_kept"])
-            .withColumn("blocks_dropped", e["blocks_dropped"])
-            .withColumn("charset_source", e["charset_source"])
-            .withColumn("canonical_url", e["canonical_url"])
-            .withColumn("is_noindex", e["is_noindex"])
-            .withColumn("extracted_text", e["extracted_text"])
-            .drop("_ext")
-        )
-    ext = make_extract_udf(dpi)
+    ext = make_extract_fast_udf(dpi, include_blocks)
     df = df.withColumn("_ext", ext(F.col("html"), F.col("text"), hint))
     e = F.col("_ext")
-    n_kept = F.size(kept_blocks(e["blocks"]))
-    n_blocks = F.size(e["blocks"])
-    return (
-        df.withColumn("route", e["route"])
-        .withColumn("title", e["title"])
-        .withColumn("parse_failed", e["parse_failed"])
-        .withColumn("error", e["error"])
-        .withColumn("bytes_in", e["bytes_in"])
-        .withColumn("charset_source", e["charset_source"])
-        .withColumn("canonical_url", e["canonical_url"])
-        .withColumn("is_noindex", e["is_noindex"])
-        .withColumn("blocks", e["blocks"])
-        .withColumn("is_tagged", e["route"] == F.lit("tagged"))
-        .withColumn(
-            "blocks_kept", F.when(e["blocks"].isNotNull(), n_kept).otherwise(F.lit(0))
-        )
-        .withColumn(
-            "blocks_dropped",
-            F.when(e["blocks"].isNotNull(), n_blocks - n_kept).otherwise(F.lit(0)),
-        )
-        .withColumn(
-            "extracted_text",
-            F.when(e["parse_failed"], F.lit(None).cast("string"))
-            .when(e["route"] == "tagged", e["tagged_text"])
-            .when(e["route"] == "plain", e["raw_text"])
-            # html route: boilerplate detected ⇒ main-content text;
-            # clean page ⇒ raw markup-strip bytes (get_text parity)
-            .when(F.col("blocks_dropped") > 0, main_text(e["blocks"]))
-            .otherwise(e["raw_text"]),
-        )
-        .drop("_ext")
-    )
+    fields = [
+        "route", "title", "parse_failed", "error", "bytes_in", "is_tagged",
+        "blocks_kept", "blocks_dropped", "charset_source", "canonical_url",
+        "is_noindex", "extracted_text",
+    ] + (["blocks"] if include_blocks else [])
+    is_tagged = e["route"] == F.lit("tagged")
+    return df.withColumns(
+        {f: is_tagged if f == "is_tagged" else e[f] for f in fields}
+    ).drop("_ext")

@@ -60,25 +60,6 @@ def corpus_fingerprint(df) -> str:
     return hashlib.md5("\n".join(files).encode()).hexdigest()
 
 
-def build_manifest(
-    docs: DataFrame, run_id: str, n_buckets: int, salt: int, corpus_fp: str = ""
-) -> DataFrame:
-    """One completion row per bucket, derived from written docs."""
-    return (
-        docs.groupBy("partition_key")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.col("parse_failed").cast("long")).alias("n_failed"),
-        )
-        .withColumn("status", F.lit("complete"))
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("n_buckets", F.lit(n_buckets))
-        .withColumn("salt", F.lit(salt))
-        .withColumn("corpus_fp", F.lit(corpus_fp))
-        .select([f.name for f in MANIFEST_SCHEMA.fields])
-    )
-
-
 def manifest_from_metrics(
     metrics: DataFrame, run_id: str, n_buckets: int, salt: int, corpus_fp: str = ""
 ) -> DataFrame:

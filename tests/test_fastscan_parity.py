@@ -1,12 +1,13 @@
-"""Differential parity: fast scanner vs stdlib HTMLParser backend.
+"""Differential parity: every production parse backend vs the stdlib
+HTMLParser reference backend.
 
-The ``fast`` backend (solrizer_spark/extraction/fastscan.py) must
-produce a bit-identical ``ExtractionResult`` — raw_text bytes, title,
-every block field including the chunk-boundary-sensitive
-``link_chars`` — for every input the stdlib backend handles. Pinned
-three ways: handcrafted adversarial constructs, the deterministic
-corpus generator at two size factors, and hypothesis fuzz over an
-HTML-ish fragment alphabet.
+The ``fused`` kernel (solrizer_spark/extraction/fusedscan.py) and, when
+it builds, the compiled ``c`` kernel must produce a bit-identical
+``ExtractionResult`` — raw_text bytes, title, every block field
+including the chunk-boundary-sensitive ``link_chars`` — for every
+input the stdlib backend handles. Pinned three ways: handcrafted
+adversarial constructs, the deterministic corpus generator at two size
+factors, and hypothesis fuzz over an HTML-ish fragment alphabet.
 """
 
 from __future__ import annotations
@@ -48,7 +49,7 @@ def _have_cscan():
     return cscan.load()
 
 
-_PARITY_BACKENDS = ("fast", "fused") + (("c",) if _have_cscan() else ())
+_PARITY_BACKENDS = ("fused",) + (("c",) if _have_cscan() else ())
 
 
 def assert_parity(payload):
@@ -207,32 +208,3 @@ def test_fuzz_parity_raw(s):
 def test_unknown_backend_raises():
     with pytest.raises(ValueError, match="unknown HTML backend"):
         extract_html("<p>x</p>", backend="nope")
-
-
-def test_lxml_backend_gated():
-    from solrizer_spark.extraction.lxml_backend import HAVE_LXML
-
-    if not HAVE_LXML:
-        with pytest.raises(ImportError, match="lxml is not installed"):
-            extract_html("<p>x</p>", backend="lxml")
-    else:  # pragma: no cover - sandbox has no lxml
-        r = extract_html("<html><body><p>hello world</p></body></html>", backend="lxml")
-        assert not r.parse_failed
-        assert "hello world" in (r.raw_text or "")
-
-
-def test_env_default_backend(monkeypatch):
-    import importlib
-
-    import solrizer_spark.extraction.html_text as ht
-
-    assert ht.DEFAULT_BACKEND == "auto"
-    monkeypatch.setenv("SOLRIZER_HTML_BACKEND", "stdlib")
-    importlib.reload(ht)
-    try:
-        assert ht.DEFAULT_BACKEND == "stdlib"
-        assert not ht.extract_html("<p>x</p>").parse_failed
-    finally:
-        monkeypatch.delenv("SOLRIZER_HTML_BACKEND")
-        importlib.reload(ht)
-        assert ht.DEFAULT_BACKEND == "auto"

@@ -25,12 +25,30 @@ def test_exact_dedup(docs):
     assert out[3] == 1 and out[4] == 1 and out[5] == 1
 
 
+def bucket_pairs(items):
+    """Reference form of the (i < j) pair set: all pairs within a
+    bucket's member array as ``array<struct<a, b>>``, built with
+    nested higher-order lambdas."""
+    return F.flatten(
+        F.transform(
+            F.sequence(F.lit(1), F.size(items) - 1),
+            lambda i: F.transform(
+                F.sequence(i + 1, F.size(items)),
+                lambda j: F.struct(
+                    F.element_at(items, i).alias("a"),
+                    F.element_at(items, j).alias("b"),
+                ),
+            ),
+        )
+    )
+
+
 def test_explode_bucket_pairs_matches_expression_form(spark):
     """The codegen double-explode pair generator (round-6 optimization)
     emits EXACTLY the (i<j) pair set of the bucket_pairs expression —
     scalar members and struct members, including 2-member buckets and
     the last-element empty-slice edge."""
-    from solrizer_spark.operators.dedup import bucket_pairs, explode_bucket_pairs
+    from solrizer_spark.operators.dedup import explode_bucket_pairs
 
     df = spark.createDataFrame(
         [(1, [1, 2, 3, 4]), (2, [7, 8]), (3, [5, 6, 7])],

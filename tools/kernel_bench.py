@@ -4,7 +4,7 @@ Usage: python tools/kernel_bench.py [n_per_cell] [size_factor...]
 
 Pure-Python timing of ``extract_html`` over the deterministic corpus
 generator — isolates kernel CPU from Spark overheads so backend swaps
-(fast vs stdlib vs lxml) can be compared apples-to-apples. Best-of-4
+(c vs fused vs stdlib) can be compared apples-to-apples. Best-of-4
 per backend (this VM's CPU allocation is bursty; see
 BENCH/BASELINE.md).
 """
@@ -19,7 +19,6 @@ sys.path.insert(0, ".")
 
 from solrizer_spark.corpus.generator import generate_page
 from solrizer_spark.extraction.html_text import _BACKENDS, extract_html
-from solrizer_spark.extraction.lxml_backend import HAVE_LXML
 
 
 def main() -> None:
@@ -35,17 +34,12 @@ def main() -> None:
     total_bytes = sum(len(h) for h in htmls)
     out = {"n_docs": len(htmls), "avg_bytes": total_bytes // len(htmls), "backends": {}}
     for name in _BACKENDS:
-        if name == "lxml" and not HAVE_LXML:
-            out["backends"][name] = {"skipped": "lxml not installed"}
-            continue
-        if name in ("c", "auto"):
+        if name == "c":
             from solrizer_spark.extraction import cscan
 
-            if name == "c" and not cscan.load():
+            if not cscan.load():
                 out["backends"][name] = {"skipped": "no C toolchain"}
                 continue
-            if name == "auto":
-                continue  # alias of c or fused; skip the duplicate row
         for h in htmls[:50]:
             extract_html(h, backend=name)
         best = float("inf")
