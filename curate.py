@@ -55,17 +55,27 @@ Ops (applied in the order given):
 * ``chunk``       split into --chunk-tokens windows with
                   --chunk-overlap carry (emits chunk rows)
 
-Per-op row counts are collected by default (one count job per op —
-fine at curation scale; ``--stats none`` for giant runs where the
-sink row count suffices).
+Per-op row counts are collected by default (``--stats full``): each op
+boundary is materialized once, as an eager ``localCheckpoint``, and its
+row count is read from an ``observe()`` metric on that same pass, so no
+op runs twice and later ops plan from the checkpoint instead of the
+whole chain. The trade-off: checkpoint blocks live on the executors
+without lineage, so losing an executor fails the run instead of
+recomputing (as the per-round checkpoints of ``connected_components``
+already do). ``--stats none`` keeps one lazy, lineage-recoverable plan
+and reports only the sink row count.
+
+Each op's Spark jobs run in job group ``curate:<index>:<op>`` (UI,
+REST, ``statusTracker().getJobIdsForGroup``).
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -354,6 +364,32 @@ def apply_op(
     raise ValueError(f"unknown op {op!r}")
 
 
+@contextmanager
+def _job_group(sc, group_id: str, description: str):
+    """Run the block's Spark jobs in job group ``group_id``."""
+    sc.setJobGroup(group_id, description)
+    try:
+        yield
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+
+def _unpin(frames: list) -> None:
+    """Release ``frames`` and empty the list. A checkpoint's blocks
+    belong to the RDD under its ``LogicalRDD`` leaf, which
+    ``DataFrame.unpersist()`` does not reach."""
+    for frame in frames:
+        frame.unpersist()
+        leaf = frame._jdf.logicalPlan()
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            rdd = leaf.rdd()
+            if rdd.getStorageLevel().isValid():  # not yet released
+                rdd.unpersist(False)
+    frames.clear()
+
+
 def run_curate(spark, args) -> dict:
     ops = [o.strip() for o in args.ops.split(",") if o.strip()]
     unknown = [o for o in ops if o not in KNOWN_OPS]
@@ -416,22 +452,30 @@ def run_curate(spark, args) -> dict:
     stats: dict = {"ops": []}
     if args.stats == "full":
         stats["rows_in"] = df.count()
-    persisted: list = []
-    for op in ops:
-        df = apply_op(df, op, args, args.id_col, args.text_col, persisted)
-        entry = {"op": op}
-        if args.stats == "full":
-            entry["rows_after"] = df.count()
-        stats["ops"].append(entry)
-    if args.output_format == "jsonl":
-        # training-export shape: sharded gzip JSONL (one doc per line),
-        # the standard LM-training input format; Spark's JSON sink is
-        # JSONL per part file already
-        df.write.mode("overwrite").option("compression", "gzip").json(args.output)
-    else:
-        df.write.mode("overwrite").parquet(args.output)
-    for frame in persisted:  # release caches pinned by dedup ops
-        frame.unpersist()
+    sc = spark.sparkContext
+    pinned: list = []  # caches taken by ops, then the current boundary
+    try:
+        for i, op in enumerate(ops):
+            entry = {"op": op}
+            with _job_group(sc, f"curate:{i}:{op}", op):
+                df = apply_op(df, op, args, args.id_col, args.text_col, pinned)
+                if args.stats == "full":
+                    # one eager pass materializes the op and counts it
+                    obs = Observation()
+                    df = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint()
+                    entry["rows_after"] = obs.get["rows"]
+                    _unpin(pinned)  # all upstream is behind the checkpoint
+                    pinned.append(df)
+            stats["ops"].append(entry)
+        if args.output_format == "jsonl":
+            # training-export shape: sharded gzip JSONL (one doc per
+            # line), the standard LM-training input format; Spark's JSON
+            # sink is JSONL per part file already
+            df.write.mode("overwrite").option("compression", "gzip").json(args.output)
+        else:
+            df.write.mode("overwrite").parquet(args.output)
+    finally:
+        _unpin(pinned)
     written = (
         # explicit schema: inference crashes on empty output and the
         # JSON writer omits null fields (all-null columns would vanish)
@@ -537,7 +581,11 @@ def main() -> None:
     ap.add_argument("--chunk-tokens", type=int, default=512)
     ap.add_argument("--chunk-overlap", type=int, default=64)
     ap.add_argument("--cpus", type=int, default=None)
-    ap.add_argument("--stats", choices=["full", "none"], default="full")
+    ap.add_argument("--stats", choices=["full", "none"], default="full",
+                    help="full: materialize each op boundary once and read "
+                    "its row count on that pass (losing an executor fails "
+                    "the run instead of recomputing); none: one lazy, "
+                    "lineage-recoverable plan, sink row count only")
     ap.add_argument("--output-format", choices=["parquet", "jsonl"],
                     default="parquet",
                     help="jsonl: sharded gzip JSON-lines training export")

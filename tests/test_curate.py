@@ -486,3 +486,115 @@ def test_curate_bloomdedup_sharded_index(spark, tmp_path):
     kept = {r["doc_id"] for r in spark.read.parquet(out).collect()}
     assert not kept.intersection({1000 + i for i in range(80)})
     assert len(kept.intersection({2000 + i for i in range(80)})) >= 78
+
+
+CHAIN = "linededup,quality,fluency,exactdedup,neardedup,chunk"
+
+
+def test_curate_stats_single_pass(spark, docs_table, tmp_path):
+    """--stats full counts each op on the pass that materializes it:
+    the only count() calls curate.py makes are rows_in and rows_out,
+    and each rows_after equals a count() of the same op prefix."""
+    import os
+    import sys
+    from unittest import mock
+
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    import curate
+
+    args = _args(input=docs_table, output=str(tmp_path / "out"), ops=CHAIN)
+    original = DataFrame.count
+    callers = []
+
+    def count(df):
+        callers.append(os.path.basename(sys._getframe(1).f_code.co_filename))
+        return original(df)
+
+    with mock.patch.object(DataFrame, "count", count):
+        stats = curate.run_curate(spark, args)
+    assert callers.count("curate.py") == 2
+
+    df = spark.read.parquet(docs_table)
+    persisted: list = []
+    reference = []
+    for op in CHAIN.split(","):
+        df = curate.apply_op(df, op, args, args.id_col, args.text_col, persisted)
+        reference.append(df.count())
+    for frame in persisted:
+        frame.unpersist()
+    assert [e["rows_after"] for e in stats["ops"]] == reference
+    assert stats["rows_in"] == 6 and stats["rows_out"] == reference[-1]
+    assert len(set(reference)) > 1  # the chain really filters
+
+
+def test_curate_stats_empty_from_quality_on(spark, docs_table, tmp_path):
+    """quality drops every doc, so each later op runs on an empty
+    relation: a filter (quality), the self-trained LM join (fluency),
+    a window (exactdedup), LSH + connected components (neardedup) and
+    an explode (chunk). Every boundary's observed count still fires."""
+    from curate import run_curate
+
+    out = str(tmp_path / "out")
+    stats = run_curate(
+        spark, _args(input=docs_table, output=out, ops=CHAIN, min_quality=1.5)
+    )
+    rows_after = [e["rows_after"] for e in stats["ops"]]
+    assert rows_after[0] == 6 and rows_after[1:] == [0] * 5
+    assert stats["rows_out"] == 0
+    assert spark.read.parquet(out).count() == 0
+
+
+def test_curate_stats_shuffle_partition_independent(spark, docs_table, tmp_path):
+    """Output rows and stats do not depend on spark.sql.shuffle.partitions."""
+    from curate import run_curate
+
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    runs = []
+    try:
+        for n in ("1", "8"):
+            spark.conf.set(key, n)
+            out = str(tmp_path / f"out{n}")
+            stats = run_curate(spark, _args(input=docs_table, output=out, ops=CHAIN))
+            runs.append((sorted(spark.read.parquet(out).collect()), stats))
+    finally:
+        spark.conf.set(key, saved)
+    assert runs[0] == runs[1]
+    assert runs[0][0], "chain kept no rows"
+
+
+def test_curate_job_groups(spark, docs_table, tmp_path):
+    """Each op's jobs run in job group curate:<index>:<op>; the group
+    is cleared once the op is done."""
+    from curate import run_curate
+
+    sc = spark.sparkContext
+    run_curate(spark, _args(input=docs_table, output=str(tmp_path / "o"), ops=CHAIN))
+    assert sc.statusTracker().getJobIdsForGroup("curate:4:neardedup")
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+
+
+@pytest.mark.parametrize("stats", ["full", "none"])
+def test_curate_failure_releases_pinned_frames(spark, docs_table, tmp_path, stats):
+    """An op that raises does not leave the caches and boundary
+    checkpoints of the ops before it pinned."""
+    from unittest import mock
+
+    import curate
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs())
+    real = curate.apply_op
+
+    def apply_op(df, op, *rest):
+        if op == "chunk":
+            raise RuntimeError("op failed")
+        return real(df, op, *rest)
+
+    args = _args(input=docs_table, output=str(tmp_path / "o"),
+                 ops="exactdedup,dsir,chunk", stats=stats)
+    with mock.patch.object(curate, "apply_op", apply_op):
+        with pytest.raises(RuntimeError, match="op failed"):
+            curate.run_curate(spark, args)
+    assert set(jsc.getPersistentRDDs()) <= before
