@@ -79,7 +79,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from solrizer_spark.session import get_spark
+from solrizer_spark.session import get_spark, unpin
 
 KNOWN_OPS = (
     "normalize", "quality", "fluency", "langs", "linededup", "substrdedup",
@@ -208,6 +208,7 @@ def apply_op(
             threshold=args.near_threshold,
         )
         comps = connected_components(pairs, algorithm=args.cc_algorithm)
+        persisted.append(comps)  # a checkpoint, released with the op
         return dedup_keep_canonical(df, comps, id_col=id_col)
     if op == "basededup":
         if args.base_index:
@@ -376,20 +377,6 @@ def _job_group(sc, group_id: str, description: str):
             sc.setLocalProperty(key, None)
 
 
-def _unpin(frames: list) -> None:
-    """Release ``frames`` and empty the list. A checkpoint's blocks
-    belong to the RDD under its ``LogicalRDD`` leaf, which
-    ``DataFrame.unpersist()`` does not reach."""
-    for frame in frames:
-        frame.unpersist()
-        leaf = frame._jdf.logicalPlan()
-        if leaf.getClass().getSimpleName() == "LogicalRDD":
-            rdd = leaf.rdd()
-            if rdd.getStorageLevel().isValid():  # not yet released
-                rdd.unpersist(False)
-    frames.clear()
-
-
 def run_curate(spark, args) -> dict:
     ops = [o.strip() for o in args.ops.split(",") if o.strip()]
     unknown = [o for o in ops if o not in KNOWN_OPS]
@@ -464,7 +451,7 @@ def run_curate(spark, args) -> dict:
                     obs = Observation()
                     df = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint()
                     entry["rows_after"] = obs.get["rows"]
-                    _unpin(pinned)  # all upstream is behind the checkpoint
+                    unpin(pinned)  # all upstream is behind the checkpoint
                     pinned.append(df)
             stats["ops"].append(entry)
         if args.output_format == "jsonl":
@@ -475,7 +462,7 @@ def run_curate(spark, args) -> dict:
         else:
             df.write.mode("overwrite").parquet(args.output)
     finally:
-        _unpin(pinned)
+        unpin(pinned)
     written = (
         # explicit schema: inference crashes on empty output and the
         # JSON writer omits null fields (all-null columns would vanish)

@@ -80,27 +80,23 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
     )
 
 
-def minhash_signatures(shingles: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature: per seed i, min over shingles of
+def minhash_signatures(shingles: str, num_hashes: int = 64) -> Column:
+    """MinHash signature of the shingle-array column named
+    ``shingles``: per seed i, min over shingles of
     ``xxhash64(shingle, i)``. Pure map-side Column expression.
 
     Deliberately UNROLLED per seed: a nested runtime loop
     (``transform(sequence(0,63), seed -> …)``) measured 12× slower —
     nested higher-order lambdas evaluate interpreted per element,
-    while unrolled literal seeds stay codegen'd. Seeds bind via a
-    closure factory, NOT an ``i=i`` default arg (pyspark treats a
-    second lambda parameter as the array-index variable)."""
-
-    def hash_with_seed(seed: int):
-        lit_seed = F.lit(seed)
-        return lambda s: F.xxhash64(s, lit_seed)
-
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, hash_with_seed(i)))
-            for i in range(num_hashes)
-        ]
+    while unrolled literal seeds stay codegen'd. Built as ONE SQL
+    string: the same 64 terms through the Column API cost ~400 py4j
+    calls (0.5-0.9 s of driver time per build, 0.09-0.49 s as SQL)."""
+    col = "`" + shingles.replace("`", "``") + "`"
+    terms = ", ".join(
+        f"array_min(transform({col}, s -> xxhash64(s, {i})))"
+        for i in range(num_hashes)
     )
+    return F.expr(f"array({terms})")
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -224,7 +220,7 @@ def minhash_lsh_pairs(
     base = ensure_min_parallelism(df).select(
         F.col(id_col).alias("_id"),
         word_shingles(text_col, shingle_n).alias("_sh"),
-    ).withColumn("_sig", minhash_signatures(F.col("_sh"), num_hashes))
+    ).withColumn("_sig", minhash_signatures("_sh", num_hashes))
     if signatures_path is not None:
         # 10^12-row scale path: the shingle/signature base is written
         # to durable storage once and re-read by the banding stage and
@@ -577,10 +573,20 @@ def connected_components(
       of diameter, the right choice for 10^12-edge graphs or long
       chain topologies (see :func:`_star_round`).
 
+    The symmetric edge list is materialized ONCE, as an eager
+    ``localCheckpoint`` right after its ``distinct()``, and everything
+    after reads that checkpoint: the ``pairs`` plan (LSH candidate
+    generation + verification, the expensive part) runs exactly once,
+    where a lazy edge list (a union of both directions, referenced
+    twice more downstream) re-ran it four times.
     Per round exactly ONE Spark action runs: the convergence checksum
     rides the eager ``localCheckpoint`` materialization as an
     ``observe()`` metric (no separate probe job), and the checkpoint
-    truncates the growing lineage.
+    truncates the growing lineage. No executor cache is taken (no
+    ``persist`` + ``count``): the loop's edge list is a checkpoint too,
+    and each checkpoint is released as soon as a later one supersedes
+    it, so only the returned labels stay pinned. Checkpoints hold no
+    lineage — losing an executor fails the call instead of recomputing.
 
     Non-convergence (component diameter > ``max_iterations`` under
     label propagation) is never silent: ``strict=True`` raises;
@@ -590,18 +596,29 @@ def connected_components(
     """
     from pyspark.sql import Observation
 
+    from solrizer_spark.session import unpin
+
     if algorithm not in ("label_propagation", "star"):
         raise ValueError(f"unknown algorithm {algorithm!r} (label_propagation|star)")
+    # both directions from ONE scan of each pair row (a union of two
+    # projections would evaluate the pair plan once per side)
+    a, b = F.col(id_a), F.col(id_b)
     edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
+        pairs.select(
+            F.inline(
+                F.array(
+                    F.struct(a.alias("src"), b.alias("dst")),
+                    F.struct(b.alias("src"), a.alias("dst")),
+                )
+            )
+        )
         .distinct()
+        .localCheckpoint()  # eager: the pair plan's ONE run
     )
 
     converged = False
     rounds = 0
     if algorithm == "star":
-        edges = edges.persist()
         labels, converged, rounds = _star_components(edges, max_iterations)
     else:
         # Round-6 loop restructuring (guide §2.4 — remove shuffles
@@ -609,12 +626,8 @@ def connected_components(
         # neighbor-min aggregation, so each round is ONE join + ONE
         # aggregation (was join + groupBy + second left join), and the
         # edge list is hash-partitioned by the join key ONCE up front —
-        # previously the persisted post-distinct layout was keyed on
-        # (src, dst), so every round re-shuffled the FULL edge list by
-        # dst. Partition count derives from the measured edge count
-        # (~500k edge rows per task), not a constant, so the loop stays
-        # narrow at bench scale and wide at 10^9+ edges; the same
-        # count() fills the persist before the loop.
+        # previously the post-distinct layout was keyed on (src, dst),
+        # so every round re-shuffled the FULL edge list by dst.
         nodes = edges.select("src").distinct()
         edges_full = edges.where(F.col("src") != F.col("dst")).unionByName(
             nodes.select("src", F.col("src").alias("dst"))
@@ -634,11 +647,9 @@ def connected_components(
             n_parts = shuffle_parts
         else:
             n_parts = max(1, min(shuffle_parts, -(-src_bytes // (64 * 1024**2))))
-        edges_full = edges_full.repartition(n_parts, "dst").persist()
-        # fill the cache NOW (one pass over the pair synthesis), then
-        # derive the initial labels from the cached self-loops — the
-        # node set never re-runs the pair synthesis lineage
-        edges_full.count()
+        edges_full = edges_full.repartition(n_parts, "dst").localCheckpoint()
+        unpin([edges])
+        # initial labels: the self-loops of the checkpointed edge list
         labels = edges_full.where(F.col("src") == F.col("dst")).select(
             F.col("src").alias("id"), F.col("src").alias("component")
         )
@@ -653,7 +664,7 @@ def connected_components(
             obs = Observation()
             new_labels = (
                 # SHUFFLE_HASH build on the label side: the (big,
-                # persisted, already-partitioned) edge list streams
+                # checkpointed, already-partitioned) edge list streams
                 # without the per-round sort a sort-merge join would
                 # re-run on it every iteration
                 edges_full.join(
@@ -666,13 +677,13 @@ def connected_components(
                 .localCheckpoint()  # eager: runs the round's ONE job
             )
             new_sum = obs.get["label_sum"]
+            unpin([labels])  # superseded (round 1: a lazy view, no-op)
             labels = new_labels
             if new_sum == prev_sum:
                 converged = True
                 break
             prev_sum = new_sum
-        edges_full.unpersist()
-    edges.unpersist()
+        unpin([edges_full])
     if stats is not None:
         stats["converged"] = converged
         stats["rounds"] = rounds
@@ -714,13 +725,17 @@ def _star_components(edges: DataFrame, max_iterations: int):
     path.
 
     Returns ``(labels, converged, rounds)`` with labels in the same
-    ``(id, component)`` shape as label propagation.
+    ``(id, component)`` shape as label propagation. ``edges`` (a
+    checkpoint) and every per-half-round checkpoint are released once
+    superseded; only the labels stay pinned.
     """
     from pyspark.sql import Observation
 
+    from solrizer_spark.session import unpin
+
     # orient each undirected edge once; keep both directions available
     # per round via the symmetric frame
-    cur = edges.where(F.col("src") != F.col("dst")).localCheckpoint()
+    cur = edges.where(F.col("src") != F.col("dst"))
     prev_sum = None
     converged = False
     rounds = 0
@@ -740,6 +755,7 @@ def _star_components(edges: DataFrame, max_iterations: int):
             .distinct()
             .localCheckpoint()
         )
+        unpin([cur])  # round 1: a lazy view of edges, no-op
         # -- small-star ------------------------------------------------
         oriented = large.select(
             F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
@@ -763,6 +779,7 @@ def _star_components(edges: DataFrame, max_iterations: int):
             .localCheckpoint()
         )
         new_sum = obs.get["label_sum"]
+        unpin([large])
         cur = small
         if new_sum == prev_sum:  # both None ⇔ empty edge set: converged
             converged = True
@@ -782,6 +799,7 @@ def _star_components(edges: DataFrame, max_iterations: int):
         .select("id", F.coalesce(F.col("_comp"), F.col("id")).alias("component"))
         .localCheckpoint()
     )
+    unpin([cur, edges])
     return labels, converged, rounds
 
 
@@ -945,7 +963,7 @@ def write_lsh_index(
     # cheaper to store shingles once than shingles + signature arrays)
     base.write.mode("overwrite").parquet(f"{path}/signatures")
     sigs = spark.read.parquet(f"{path}/signatures")  # durable, re-read
-    resig = sigs.withColumn("_sig", minhash_signatures(F.col("_sh"), num_hashes))
+    resig = sigs.withColumn("_sig", minhash_signatures("_sh", num_hashes))
     banded = resig.select("_id", band_key_expr(F.col("_sig"), bands, rows_per_band).alias("bk"))
     capped = cap_bucket_rows(
         banded, [F.col("bk.band"), F.col("bk.key")], [F.col("_id")], max_bucket
@@ -1005,7 +1023,7 @@ def dedup_against_index(
             F.col(id_col).cast("string").alias("_nid"),
             word_shingles(text_col, shingle_n).alias("_nsh"),
         )
-        .withColumn("_sig", minhash_signatures(F.col("_nsh"), num_hashes))
+        .withColumn("_sig", minhash_signatures("_nsh", num_hashes))
     )
     if persist_increment:
         # feeds banding AND verification; same never-unpersisted

@@ -153,6 +153,22 @@ def _scan_split_estimate(df: DataFrame) -> int | None:
     return splits
 
 
+def _checkpoint_partitions(df: DataFrame) -> int | None:
+    """Partition count behind a plan whose every leaf is a
+    ``LogicalRDD`` (a checkpoint, or a DataFrame built from an RDD):
+    the sum of the leaves' RDD partition counts. The partitions of an
+    RDD are known on the driver, so this runs no job. None (= unknown)
+    for any other plan."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    total = 0
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "LogicalRDD":
+            return None
+        total += leaf.rdd().getNumPartitions()
+    return total
+
+
 def ensure_min_parallelism(df: DataFrame, floor: int | None = None) -> DataFrame:
     """Round-robin repartition up to the session's default parallelism
     when the input's SCAN yields fewer splits — otherwise pass through.
@@ -167,13 +183,19 @@ def ensure_min_parallelism(df: DataFrame, floor: int | None = None) -> DataFrame
     The split count is estimated statically from the file listing
     (`_scan_split_estimate`) — one plan analysis, zero Spark jobs, no
     AQE finalization, so calling this on an uncached shuffled plan
-    never double-executes upstream stages. When the estimate is
-    unknown (non-file source, remote filesystem, or an upstream
-    shuffle-only plan) the input passes through: shuffle outputs
-    already carry ``spark.sql.shuffle.partitions``-many partitions,
-    which is the parallelism this guard exists to restore."""
+    never double-executes upstream stages. A plan read from
+    checkpoints (every leaf a ``LogicalRDD``) is counted too, by its
+    checkpoints' partitions (`_checkpoint_partitions`, also zero
+    jobs): an AQE-coalesced checkpoint often holds one partition.
+    When the estimate is unknown (non-file source, remote
+    filesystem, or an upstream shuffle-only plan) the input passes
+    through: shuffle outputs already carry
+    ``spark.sql.shuffle.partitions``-many partitions, which is the
+    parallelism this guard exists to restore."""
     want = floor or df.sparkSession.sparkContext.defaultParallelism
     est = _scan_split_estimate(df)
+    if est is None:
+        est = _checkpoint_partitions(df)
     if est is not None and est < want:
         return df.repartition(want)
     return df

@@ -232,3 +232,18 @@ def local_df(spark: SparkSession, rows, schema: str):
         # rows pandas/Arrow can't shape — fall back to the plain path
         # (correct, just slower); schema/analysis errors still raise
         return spark.createDataFrame(rows, schema)
+
+
+def unpin(frames: list) -> None:
+    """Release ``frames`` (cached or checkpointed DataFrames) and
+    empty the list. A checkpoint's blocks belong to the RDD under its
+    ``LogicalRDD`` leaf, which ``DataFrame.unpersist()`` does not
+    reach."""
+    for frame in frames:
+        frame.unpersist()
+        leaf = frame._jdf.logicalPlan()
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            rdd = leaf.rdd()
+            if rdd.getStorageLevel().isValid():  # not yet released
+                rdd.unpersist(False)
+    frames.clear()

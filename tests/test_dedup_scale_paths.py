@@ -132,6 +132,47 @@ def test_cc_empty_pairs(spark):
         assert stats["converged"] is True
 
 
+@pytest.mark.parametrize("algorithm", ["label_propagation", "star"])
+def test_cc_releases_superseded_checkpoints(spark, algorithm):
+    """Only the returned labels stay pinned: the edge list and every
+    per-round checkpoint are released once superseded."""
+    from solrizer_spark.operators.dedup import connected_components
+    from solrizer_spark.session import unpin
+
+    edges = [(i, i + 1) for i in range(1, 31)]
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs())
+    labels = connected_components(
+        _pairs_df(spark, edges), algorithm=algorithm, max_iterations=40
+    )
+    assert len(set(jsc.getPersistentRDDs()) - before) == 1
+    assert _labels(labels) == _expected_components(edges)
+    unpin([labels])
+    assert set(jsc.getPersistentRDDs()) <= before
+
+
+@pytest.mark.parametrize("algorithm", ["label_propagation", "star"])
+def test_cc_runs_pair_plan_once(spark, algorithm):
+    """Each row of the pairs plan is evaluated exactly once per call,
+    however often the edge list is referenced downstream."""
+    from solrizer_spark.operators.dedup import connected_components
+
+    edges = TOPOLOGIES["star_plus_chain"]
+    evaluated = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def tag(x):
+        evaluated.add(1)
+        return x
+
+    pairs = _pairs_df(spark, edges).select(
+        tag(F.col("id_a")).alias("id_a"), "id_b"
+    )
+    got = _labels(connected_components(pairs, algorithm=algorithm))
+    assert got == _expected_components(edges)
+    assert evaluated.value == len(edges)
+
+
 def _near_dup_docs(spark, n=40):
     """Docs where ids 3k/3k+1 are near-identical and 3k+2 is distinct."""
     base = spark.range(n).select(

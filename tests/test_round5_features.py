@@ -52,6 +52,20 @@ def test_min_parallelism_repartitions_single_file_scan(spark, tmp_path):
     assert ensure_min_parallelism(df, floor=1) is df
 
 
+def test_min_parallelism_counts_checkpoint_partitions(spark):
+    """A plan read from a checkpoint (no input files) is estimated by
+    the checkpoint's partitions — statically, with no Spark job."""
+    from solrizer_spark.operators.repartition import ensure_min_parallelism
+
+    ckpt = spark.range(100).coalesce(1).localCheckpoint()
+    tracker = spark.sparkContext.statusTracker()
+    before = tracker.getJobIdsForGroup()
+    out = ensure_min_parallelism(ckpt.where(F.col("id") > 3), floor=4)
+    assert tracker.getJobIdsForGroup() == before
+    assert out.rdd.getNumPartitions() == 4
+    assert ensure_min_parallelism(ckpt, floor=1) is ckpt
+
+
 def test_scan_split_estimate_counts_splits(spark, tmp_path):
     from solrizer_spark.operators.repartition import _scan_split_estimate
 

@@ -75,6 +75,55 @@ def test_explode_bucket_pairs_matches_expression_form(spark):
     assert got == [(1, 20), (1, 30), (2, 30)]
 
 
+def minhash_signatures_columns(shingles, num_hashes=64):
+    """Reference form of the MinHash signature: the same unrolled
+    per-seed terms built through the Column API (one py4j call per
+    node, ~400 per 64-hash build)."""
+
+    # a closure factory, not an ``i=i`` default arg: pyspark reads a
+    # second lambda parameter as the array-index variable
+    def hash_with_seed(seed):
+        lit_seed = F.lit(seed)
+        return lambda s: F.xxhash64(s, lit_seed)
+
+    return F.array(
+        *[
+            F.array_min(F.transform(shingles, hash_with_seed(i)))
+            for i in range(num_hashes)
+        ]
+    )
+
+
+def test_minhash_signatures_match_column_form(spark):
+    """The SQL-string signature equals the Column-API form on empty,
+    single-token, unicode, long and null texts, and on an empty
+    shingle array."""
+    from solrizer_spark.operators.dedup import minhash_signatures, word_shingles
+
+    texts = [
+        "",
+        "word",
+        "zwölf Boxkämpfer jagen Viktor quer über den großen Sylter Deich 東京 🙂",
+        " ".join(f"tok{i % 97}" for i in range(2000)),
+        None,
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "k int, text string").select(
+        "k", word_shingles("text", 3).alias("sh")
+    ).union(
+        spark.createDataFrame([(len(texts), [])], "k int, sh array<string>")
+    )
+    for n in (1, 64):
+        rows = df.select(
+            "k",
+            minhash_signatures("sh", n).alias("new"),
+            minhash_signatures_columns(F.col("sh"), n).alias("old"),
+        ).collect()
+        assert len(rows) == len(texts) + 1
+        for r in rows:
+            assert r["new"] == r["old"], r["k"]
+            assert len(r["new"]) == n
+
+
 def test_word_shingles(spark):
     from solrizer_spark.operators.dedup import word_shingles
 

@@ -150,8 +150,8 @@ def main() -> None:
         # recompute that turns a 15 s stage into hours
         sig_df = docs.select(
             F.col("doc_id").alias("_id"),
-            minhash_signatures(word_shingles("text", 3), 64).alias("_sig"),
-        ).persist()
+            word_shingles("text", 3).alias("_sh"),
+        ).select("_id", minhash_signatures("_sh", 64).alias("_sig")).persist()
         sig_df.count()
         banded = sig_df.select(
             "_id", band_key_expr(F.col("_sig"), 16, 4).alias("bk")
